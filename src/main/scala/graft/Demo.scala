@@ -76,8 +76,7 @@ object Demo {
       val sc = spark.sparkContext
       val state = Pipeline.bootstrapState(
         Pipeline.allMentions(turns.where(isBase).as[graft.model.Turn],
-                             sc.broadcast(dict), sc.broadcast(vecs),
-                             Pipeline.Config(score = score)),
+                             sc.broadcast(dict), sc.broadcast(vecs)),
         Pipeline.Config(score = score))
       val inc = Pipeline.runIncremental(turns.where(!isBase).as[graft.model.Turn],
                                         dict, vecs, state,

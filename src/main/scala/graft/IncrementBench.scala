@@ -75,8 +75,6 @@ object IncrementBench {
     }
     val baseS = (System.nanoTime() - t0) / 1e9
 
-    val profile = sys.env.get("GRAFT_INC_PROFILE").contains("1")
-
     // GRAFT_INC_JOINED=1: time the DISTRIBUTED-dimension increment
     // (Pipeline.runJoinedIncremental) — dictionary and vectors read from
     // parquet dimension tables, no driver Map anywhere. This is the
@@ -110,11 +108,9 @@ object IncrementBench {
     val nRetract = if (retractMode) retractConvs.count() else -1L
 
     // timed: the increment (before the full run, so warm-up bias favors
-    // the from-scratch side). In profile mode the phased run below IS the
-    // increment — running both would leave the first run's checkpoint
-    // blocks contaminating the second's phase attribution.
+    // the from-scratch side)
     val t1 = System.nanoTime()
-    val (nUpserts, incS, nClusters) = if (profile) (-1L, -1.0, -1L) else if (retractMode) {
+    val (nUpserts, incS, nClusters) = if (retractMode) {
       val ret = Pipeline.runRetraction(retractConvs,
         if (dropEdges) state.copy(edges = None) else state)
       val ups = ret.clusterUpserts.count()
@@ -145,17 +141,14 @@ object IncrementBench {
     val nFull = if (skipFull) -1L else Pipeline.run(fullInput, dict, vecs).count()
     val fullS = if (skipFull) -1.0 else (System.nanoTime() - t2) / 1e9
 
-    // ratios are only meaningful when BOTH legs were actually timed —
-    // in profile mode incS is the -1.0 sentinel and an unguarded divide
-    // would emit negative garbage into the bench-evidence jsonl
-    val speedup = if (skipFull || profile || incS <= 0) 0.0 else fullS / incS
+    val speedup = if (skipFull) 0.0 else fullS / incS
     // in retract mode the timed operation touches the RETRACTED turns,
     // not the increment delta — report the workload it actually measured
     val nWork =
       if (retractMode)
         baseTurns.join(retractConvs, Seq("conv_id"), "left_semi").count()
       else nDelta
-    val deltaThr = if (profile || incS <= 0) 0.0 else nWork / incS
+    val deltaThr = nWork / incS
     val json =
       s"""{"metric":"increment_bench","convs":$nConvs,"turns":$nTurns,""" +
       s""""delta_frac":$deltaFrac,"delta_turns":$nWork,""" +
@@ -166,60 +159,6 @@ object IncrementBench {
       s""""joined":$joined,"retract":$retractMode,"retract_convs":$nRetract,""" +
       s""""retract_fast":${retractMode && !dropEdges && state.edges.isDefined},"ncpu":$cpus}"""
     println(json)
-
-    // GRAFT_INC_PROFILE=1 + GRAFT_INC_RETRACT=1: attribute the retraction
-    // repair wall via Pipeline.PhaseTimer (each stage ends in an eager
-    // localCheckpoint, so per-stage walls are real compute)
-    if (profile && retractMode) {
-      val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      Pipeline.PhaseTimer.sink = Some((n, s) => phases.synchronized { phases += ((n, s)) })
-      val tr = System.nanoTime()
-      val ret = Pipeline.runRetraction(retractConvs,
-        if (dropEdges) state.copy(edges = None) else state)
-      val ups = ret.clusterUpserts.count()
-      val wall = (System.nanoTime() - tr) / 1e9
-      Pipeline.PhaseTimer.sink = None
-      val body = phases.map { case (n, s) => s""""$n":$s""" }.mkString(",")
-      println(s"""{"metric":"retraction_profile","wall_s":$wall,""" +
-        s""""upsert_rows":$ups,"fast":${!dropEdges && state.edges.isDefined},$body}""")
-    }
-    // GRAFT_INC_PROFILE=1: run the increment phase by phase in a clean
-    // JVM (the headline run is skipped) and report where the wall goes
-    else if (profile) {
-      def timed[A](body: => A): (A, Double) = {
-        val t = System.nanoTime(); val a = body; (a, (System.nanoTime() - t) / 1e9)
-      }
-      val cfgP = Pipeline.Config()
-      // joined mode: attribute the dimension-join detection separately
-      // from the (shared) increment tail — the tail is identical
-      // machinery to the broadcast path, so any scaling gap between the
-      // two configurations lives in this phase
-      val (deltaMs, detectS) = timed {
-        (if (joined)
-          operators.MentionDetect.resolveJoined(
-            operators.Coref.detectAndInheritJoined(
-              deltaTurns,
-              spark.read.parquet(s"$dimsDir/dict").as[graft.model.DictEntry],
-              dict.size.toLong, 0.01),
-            spark.read.parquet(s"$dimsDir/vecs")).toDF()
-        else
-          Pipeline.allMentions(deltaTurns, dictBc, vecsBc).toDF()
-        ).localCheckpoint(true)
-      }
-      val (parts, partsS) = timed {
-        Pipeline.incrementParts(deltaMs, state, cfgP)
-      }
-      val (memberEdges, memberS) = timed { parts.memberEdges.localCheckpoint(true) }
-      val (newEdges, edgesS) = timed { parts.newEdges.localCheckpoint(true) }
-      val (ups, upsertsS) = timed {
-        Pipeline.incrementUpserts(deltaMs, parts.deltaReps, memberEdges,
-                                  newEdges, state, cfgP).localCheckpoint(true)
-      }
-      val (_, mergeS) = timed { Pipeline.mergedClusters(state, ups).count() }
-      println(s"""{"metric":"increment_profile","detect_s":$detectS,""" +
-        s""""parts_s":$partsS,"member_s":$memberS,"edges_s":$edgesS,""" +
-        s""""upserts_s":$upsertsS,"merge_s":$mergeS}""")
-    }
     spark.stop()
   }
 }

@@ -25,50 +25,27 @@ object Pipeline {
       blockMaxSize: Int = 10000000,
       starThreshold: Int = 2048,
       starK: Int = 3,
-      ccMaxIter: Int = 50,
-      supernode: Boolean = true,
-      coref: Boolean = true,
-      // one-shuffle mention stage (detect+inherit in one conv group) vs
-      // the round-3 two-pass shape (map-only detect persisted + cogroup);
-      // property-equal outputs — the flag exists so StageProfile can A/B
-      // the two shapes' scaling. Default: one-shot (fewer shuffles, no
-      // detected-mention materialization).
-      corefOneShot: Boolean = true)
-
-  def mentions(turns: Dataset[Turn],
-               dictBc: Broadcast[Map[String, DictEntry]],
-               vecsBc: Broadcast[Map[String, Array[Float]]]): Dataset[Mention] =
-    MentionDetect.run(turns, dictBc, vecsBc)
+      ccMaxIter: Int = 50)
 
   /** Flagship mention universe: detected ∪ coref-inherited (REL
     * with_coref — SURVEY §2.3 "union with the detected set downstream").
     * Inherited mentions occupy token positions detection left uncovered,
     * so the union is id-disjoint by construction.
     *
-    * Default shape (corefOneShot): ONE shuffle of the slim turn table;
-    * detection and inheritance run together per conversation group
-    * (Coref.detectAndInherit). The legacy two-pass shape (map-only
-    * detection persisted + a turns⋈mentions cogroup + union) is kept
-    * behind the flag for A/B profiling; the two are property-equal
-    * (PipelineSpec). */
+    * ONE shuffle of the slim turn table: detection and inheritance run
+    * together per conversation group (Coref.detectAndInherit). It equals
+    * the two-pass shape (map-only detection, then a turns⋈mentions
+    * cogroup for inheritance, then a union) that PipelineSpec keeps as
+    * its reference. */
   def allMentions(turns: Dataset[Turn],
                   dictBc: Broadcast[Map[String, DictEntry]],
-                  vecsBc: Broadcast[Map[String, Array[Float]]],
-                  cfg: Config = Config()): Dataset[Mention] = {
-    if (!cfg.coref) mentions(turns, dictBc, vecsBc)
-    else if (cfg.corefOneShot) Coref.detectAndInherit(turns, dictBc, vecsBc)
-    else {
-      val det = CacheTracker.register(
-        mentions(turns, dictBc, vecsBc)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      det.unionByName(Coref.inherited(turns, det, dictBc, vecsBc))
-    }
-  }
+                  vecsBc: Broadcast[Map[String, Array[Float]]]): Dataset[Mention] =
+    Coref.detectAndInherit(turns, dictBc, vecsBc)
 
   /** mentions → (mention_id, conv_id, turn_idx, begin, end, surface, norm,
     * resolved, cluster_id). Singleton mentions keep their own id.
     *
-    * Supernode collapse (cfg.supernode): mentions with identical
+    * Supernode collapse: mentions with identical
     * (norm, resolved) and a confident ED margin are guaranteed to score
     * above the edge threshold pairwise (jw = lev = 1, agree = 1 ⇒ score ≥
     * wJw + wLev + wAgree + wPrior·p_top − wCos ≥ threshold for the default
@@ -87,9 +64,7 @@ object Pipeline {
       // this is the stage-A checkpoint table (runCheckpointed).
       import org.apache.spark.storage.StorageLevel
       val msP = CacheTracker.register(ms.persist(StorageLevel.MEMORY_AND_DISK))
-      val (scoringMs0, memberEdges) = PhaseTimer.timed("supernode") {
-        if (cfg.supernode) supernodeCollapse(msP, cfg) else (msP, None)
-      }
+      val (scoringMs0, memberEdges) = supernodeCollapse(msP, cfg)
       val scoringMs = CacheTracker.register(scoringMs0.persist(StorageLevel.MEMORY_AND_DISK))
       val keyed = Blocking.withBlockKeys(scoringMs, cfg.lsh)
       val pairIds = Blocking.candidatePairs(keyed, cfg.tau, cfg.blockMaxSize,
@@ -99,9 +74,7 @@ object Pipeline {
       // of the stage table runCheckpointed writes), then release every
       // intermediate cache — callers get a self-contained frame and repeated
       // cluster() calls in one session no longer accumulate cached blocks.
-      val out = PhaseTimer.timed("assemble_ckpt") {
-        assemble(msP.toDF(), scored, memberEdges, cfg).localCheckpoint(true)
-      }
+      val out = assemble(msP.toDF(), scored, memberEdges, cfg).localCheckpoint(true)
       CacheTracker.drainUnpersist()
       out
     }
@@ -113,20 +86,14 @@ object Pipeline {
     * component min over scoring nodes is the global min — cluster ids
     * stay min-member. */
   private def assemble(msDf: DataFrame, scored: DataFrame,
-                       memberEdges: Option[DataFrame], cfg: Config): DataFrame = {
-    val assign = PhaseTimer.timed("cc") {
-      Clustering.connectedComponents(scored, cfg.ccMaxIter)
-    }
-    val full = memberEdges match {
-      case Some(me) =>
-        val memberAssign = me
-          .select(col("src").as("rep_id"), col("dst").as("member_id"))
-          .join(assign, col("rep_id") === col("node"), "left")
-          .select(col("member_id").as("node"),
-                  coalesce(col("cluster_id"), col("rep_id")).as("cluster_id"))
-        assign.unionByName(memberAssign)
-      case None => assign
-    }
+                       memberEdges: DataFrame, cfg: Config): DataFrame = {
+    val assign = Clustering.connectedComponents(scored, cfg.ccMaxIter)
+    val memberAssign = memberEdges
+      .select(col("src").as("rep_id"), col("dst").as("member_id"))
+      .join(assign, col("rep_id") === col("node"), "left")
+      .select(col("member_id").as("node"),
+              coalesce(col("cluster_id"), col("rep_id")).as("cluster_id"))
+    val full = assign.unionByName(memberAssign)
     msDf
       .join(full, msDf("mention_id") === full("node"), "left")
       .select(col("mention_id"), col("conv_id"), col("turn_idx"), col("begin"),
@@ -160,7 +127,7 @@ object Pipeline {
       .agg(min("mention_id").as("rep_id"))
 
   private def supernodeCollapse(ms: Dataset[Mention], cfg: Config)
-      : (Dataset[Mention], Option[DataFrame]) = {
+      : (Dataset[Mention], DataFrame) = {
     val spark = ms.sparkSession
     import spark.implicits._
     val msDf = ms.toDF()
@@ -182,12 +149,12 @@ object Pipeline {
     // mention ids are ~25-byte strings, so 1M ≈ 25-50 MB serialized —
     // comfortably under executor broadcast budgets; 5M (round 1) risked
     // a 100-300 MB broadcast per executor.
-    val idRows = PhaseTimer.timed("scoring_ids_count") { scoringIds.count() }
+    val idRows = scoringIds.count()
     val idSide = if (idRows <= 1000000L) broadcast(scoringIds) else scoringIds
     val scoringMs = msDf
       .join(idSide, Seq("mention_id"), "left_semi")
       .as[Mention]
-    (scoringMs, Some(memberEdges))
+    (scoringMs, memberEdges)
   }
 
   /** Full run from raw turns: detect (∪ coref-inherit) → cluster. */
@@ -196,7 +163,7 @@ object Pipeline {
           vecs: Map[String, Array[Float]],
           cfg: Config = Config()): DataFrame = CacheTracker.scoped {
     val sc = turns.sparkSession.sparkContext
-    val out = cluster(allMentions(turns, sc.broadcast(dict), sc.broadcast(vecs), cfg), cfg)
+    val out = cluster(allMentions(turns, sc.broadcast(dict), sc.broadcast(vecs)), cfg)
     // cluster() localCheckpoints its output — the detected-mention persist
     // registered by allMentions in THIS scope can go now
     CacheTracker.drainUnpersist()
@@ -230,13 +197,7 @@ object Pipeline {
                 cfg: Config = Config(),
                 expectedDictKeys: Long = 0L,
                 bloomFpp: Double = 0.01): DataFrame = CacheTracker.scoped {
-    val ms0 =
-      if (cfg.coref)
-        Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp)
-      else
-        MentionDetect.runJoined(turns, dictDf,
-          turns.sparkSession.sparkContext.broadcast(Map.empty[String, Array[Float]]),
-          expectedDictKeys, bloomFpp)
+    val ms0 = Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp)
     val out = cluster(MentionDetect.resolveJoined(ms0, vecDf), cfg)
     CacheTracker.drainUnpersist()
     out
@@ -295,8 +256,7 @@ object Pipeline {
       import spark.implicits._
       val msDf = ms0.toDF().localCheckpoint(true)
       val ms = msDf.as[Mention]
-      val (scoringMs0, memberEdges) =
-        if (cfg.supernode) supernodeCollapse(ms, cfg) else (ms, None)
+      val (scoringMs0, memberEdges) = supernodeCollapse(ms, cfg)
       val scoringMs = CacheTracker.register(
         scoringMs0.persist(StorageLevel.MEMORY_AND_DISK))
       val keyed = Blocking.withBlockKeys(scoringMs, cfg.lsh).localCheckpoint(true)
@@ -331,7 +291,7 @@ object Pipeline {
       import spark.implicits._
       val sc = spark.sparkContext
       val msDf = TableIO.stage(spark, "mentions", s"$root/mentions", fingerprint) {
-        allMentions(turns, sc.broadcast(dict), sc.broadcast(vecs), cfg).toDF()
+        allMentions(turns, sc.broadcast(dict), sc.broadcast(vecs)).toDF()
       }
       // the in-memory bootstrap over the staged mentions is cheap to
       // re-enter on resume only when every downstream stage exists;
@@ -434,28 +394,25 @@ object Pipeline {
         .filter(_.startsWith("epoch_"))
         .flatMap(n => scala.util.Try(n.stripPrefix("epoch_").toInt).toOption)
     val epoch = (prior :+ 0).max + 1
-    // The five rewrites are INDEPENDENT jobs over already-materialized
-    // frames (bootstrap/apply localCheckpoint their outputs) writing to
-    // disjoint paths/table names — overlapped via TableIO.writeBucketedAll
-    // (guide §2.6) instead of serializing five write barriers.
-    // GRAFT_COMPACT_PARALLEL=0 collapses to serial writes — a
-    // measurement/ops knob so one binary can A/B the overlap on
-    // identical state (same pattern as GRAFT_RETRACT_DELTA).
-    val threads =
-      if (sys.env.get("GRAFT_COMPACT_PARALLEL").contains("0")) 1 else 3
+    // The rewrites are INDEPENDENT jobs over already-materialized frames
+    // (bootstrap/apply localCheckpoint their outputs) writing to disjoint
+    // paths/table names — overlapped via TableIO.writeBucketedAll
+    // (guide §2.6) instead of serializing one write barrier per table.
     def spec(df: DataFrame, n: String, key: String) =
-      (df, s"graft_${label}_${n}_e${epoch}_$app",
-       s"$root/epoch_$epoch/$n", Seq(key), buckets)
+      n -> (df, s"graft_${label}_${n}_e${epoch}_$app",
+            s"$root/epoch_$epoch/$n", Seq(key), buckets)
     val specs = Seq(
       spec(state.mentions, "mentions", "mention_id"),
       spec(state.keyed, "keyed", "block_key"),
       spec(state.reps, "reps", "rep_id"),
       spec(state.clusters, "clusters", "mention_id")) ++
       state.edges.map(e => spec(e, "edges", "src")).toSeq
-    val written = sources.TableIO.writeBucketedAll(specs, threads)
+    val written = specs.map(_._1)
+      .zip(sources.TableIO.writeBucketedAll(specs.map(_._2))).toMap
     IncrementState(
-      mentions = written(0), keyed = written(1), reps = written(2),
-      clusters = written(3), edges = state.edges.map(_ => written(4)))
+      mentions = written("mentions"), keyed = written("keyed"),
+      reps = written("reps"), clusters = written("clusters"),
+      edges = written.get("edges"))
   }
 
   /** Append-only INCREMENTAL maintenance of a clustered corpus — the
@@ -518,7 +475,7 @@ object Pipeline {
                      cfg: Config = Config()): Increment = CacheTracker.scoped {
     val sc = newTurns.sparkSession.sparkContext
     incrementFrom(
-      allMentions(newTurns, sc.broadcast(dict), sc.broadcast(vecs), cfg).toDF(),
+      allMentions(newTurns, sc.broadcast(dict), sc.broadcast(vecs)).toDF(),
       state, cfg)
   }
 
@@ -535,13 +492,7 @@ object Pipeline {
                            cfg: Config = Config(),
                            expectedDictKeys: Long = 0L,
                            bloomFpp: Double = 0.01): Increment = CacheTracker.scoped {
-    val ms0 =
-      if (cfg.coref)
-        Coref.detectAndInheritJoined(newTurns, dictDf, expectedDictKeys, bloomFpp)
-      else
-        MentionDetect.runJoined(newTurns, dictDf,
-          newTurns.sparkSession.sparkContext.broadcast(Map.empty[String, Array[Float]]),
-          expectedDictKeys, bloomFpp)
+    val ms0 = Coref.detectAndInheritJoined(newTurns, dictDf, expectedDictKeys, bloomFpp)
     incrementFrom(MentionDetect.resolveJoined(ms0, vecDf).toDF(), state, cfg)
   }
 
@@ -578,7 +529,7 @@ object Pipeline {
     val sc = spark.sparkContext
     val deltaMs = TableIO.stage(spark, "mentions_delta",
         s"$root/mentions_delta", fingerprint) {
-      allMentions(newTurns, sc.broadcast(dict), sc.broadcast(vecs), cfg).toDF()
+      allMentions(newTurns, sc.broadcast(dict), sc.broadcast(vecs)).toDF()
     }
     // incrementParts is EAGER (see its Scaladoc), so only run it when
     // some delta stage is actually missing — a fully-staged rerun (the
@@ -611,7 +562,7 @@ object Pipeline {
               upserts, mergedClusters(state, upserts))
   }
 
-  private[graft] case class IncParts(deltaKeyed: DataFrame, deltaReps: DataFrame,
+  private case class IncParts(deltaKeyed: DataFrame, deltaReps: DataFrame,
                               memberEdges: DataFrame, newEdges: DataFrame)
 
   /** Delta-side increment machinery — EAGER: every multiply-referenced
@@ -626,11 +577,11 @@ object Pipeline {
     * AQE decides from its measured size — never forced, so an unusually
     * fat delta degrades to a shuffled join instead of an executor
     * OOM). */
-  private[graft] def incrementParts(deltaMs: DataFrame, state: IncrementState,
+  private def incrementParts(deltaMs: DataFrame, state: IncrementState,
                              cfg: Config): IncParts = {
     val spark = deltaMs.sparkSession
     import spark.implicits._
-    val isEligible = if (cfg.supernode) eligibleCond(cfg) else lit(false)
+    val isEligible = eligibleCond(cfg)
     val slim = deltaMs.select(col("mention_id"), col("norm"), col("resolved"),
                               col("resolvedScore"))
     val eligible = slim.where(isEligible)
@@ -694,7 +645,7 @@ object Pipeline {
     * (b) delta scoring mentions, (c) delta members via their rep's
     * cluster. Linear slim scans of `state.clusters` are the only base
     * touches; output is O(delta + affected-cluster membership). */
-  private[graft] def incrementUpserts(deltaMs: DataFrame, deltaReps: DataFrame,
+  private def incrementUpserts(deltaMs: DataFrame, deltaReps: DataFrame,
                                memberEdges: DataFrame, newEdges: DataFrame,
                                state: IncrementState, cfg: Config): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -733,9 +684,8 @@ object Pipeline {
       .select(metaCols.map(state.clusters(_)) :+
               remapChanged("new_cid").as("cluster_id"): _*)
     // (b) delta scoring mentions: own node id, remapped if merged
-    val isEligible = if (cfg.supernode) eligibleCond(cfg) else lit(false)
     val scoringIds = deltaReps.select(col("rep_id").as("mention_id"))
-      .unionByName(deltaMs.where(!isEligible).select(col("mention_id")))
+      .unionByName(deltaMs.where(!eligibleCond(cfg)).select(col("mention_id")))
     val scoringRows = deltaMeta.join(scoringIds, Seq("mention_id"), "left_semi")
       .join(remapChanged.withColumnRenamed("old_cid", "mention_id"),
             Seq("mention_id"), "left")
@@ -849,25 +799,6 @@ object Pipeline {
     out
   }
 
-  /** Opt-in wall-clock attribution for maintenance internals: when a
-    * sink is installed (IncrementBench profile mode), stages wrapped in
-    * [[PhaseTimer.timed]] report their wall seconds. The stages below
-    * each end in an EAGER localCheckpoint, so the measured wall is the
-    * stage's real compute, not lazy-plan bleed into a later stage. Never
-    * installed in production paths — a None sink is a virtual call and
-    * nothing else. */
-  private[graft] object PhaseTimer {
-    @volatile var sink: Option[(String, Double) => Unit] = None
-    def timed[A](name: String)(body: => A): A = sink match {
-      case Some(f) =>
-        val t0 = System.nanoTime()
-        val a = body
-        f(name, (System.nanoTime() - t0) / 1e9)
-        a
-      case None => body
-    }
-  }
-
   /** The retraction's three affected-region artifacts — each
     * retract-sized, each a checkpointable stage table. */
   private[graft] case class RetrParts(replacementReps: DataFrame,
@@ -886,10 +817,8 @@ object Pipeline {
     import spark.implicits._
 
     val slimClusters = state.clusters.select("mention_id", "conv_id", "cluster_id")
-    val retracted = PhaseTimer.timed("retracted_carve") {
-      slimClusters.join(rconvs, Seq("conv_id"), "left_semi")
-        .select("mention_id", "cluster_id").localCheckpoint(true)
-    }
+    val retracted = slimClusters.join(rconvs, Seq("conv_id"), "left_semi")
+      .select("mention_id", "cluster_id").localCheckpoint(true)
     val retractIds = retracted.select("mention_id")
     // A cluster can change ONLY if it lost a SCORING mention (one with
     // keyed rows): non-scoring spokes hang off their supernode rep, so
@@ -910,35 +839,29 @@ object Pipeline {
       .select("cluster_id").distinct()
 
     // survivors of affected clusters (meta + old assignment)
-    val surv = PhaseTimer.timed("surv_carve") {
-      state.clusters
-        .join(affectedCids, Seq("cluster_id"), "left_semi")
-        .join(rconvs, Seq("conv_id"), "left_anti")
-        .localCheckpoint(true)
-    }
+    val surv = state.clusters
+      .join(affectedCids, Seq("cluster_id"), "left_semi")
+      .join(rconvs, Seq("conv_id"), "left_anti")
+      .localCheckpoint(true)
     val survIds = surv.select("mention_id")
 
     // supernode repair: groups whose representative was retracted re-mint
     // rep = min over eligible survivors (== from-scratch group-min)
-    val isEligible = if (cfg.supernode) eligibleCond(cfg) else lit(false)
-    val survMeta = PhaseTimer.timed("surv_meta_carve") {
-      state.mentions
-        .join(survIds, Seq("mention_id"), "left_semi")
-        .select(col("mention_id"), col("norm"), col("resolved"),
-                col("resolvedScore"))
-        .localCheckpoint(true)
-    }
+    val isEligible = eligibleCond(cfg)
+    val survMeta = state.mentions
+      .join(survIds, Seq("mention_id"), "left_semi")
+      .select(col("mention_id"), col("norm"), col("resolved"),
+              col("resolvedScore"))
+      .localCheckpoint(true)
     val brokenGroups = state.reps
       .join(retractIds.withColumnRenamed("mention_id", "rep_id"),
             Seq("rep_id"), "left_semi")
       .select("norm", "resolved")
-    val replacementReps = PhaseTimer.timed("rep_repair") {
-      survMeta.where(isEligible)
-        .join(brokenGroups, Seq("norm", "resolved"), "left_semi")
-        .groupBy("norm", "resolved")
-        .agg(min("mention_id").as("rep_id"))
-        .localCheckpoint(true)
-    }
+    val replacementReps = survMeta.where(isEligible)
+      .join(brokenGroups, Seq("norm", "resolved"), "left_semi")
+      .groupBy("norm", "resolved")
+      .agg(min("mention_id").as("rep_id"))
+      .localCheckpoint(true)
     val newRepsTable = state.reps
       .join(brokenGroups, Seq("norm", "resolved"), "left_anti")
       .unionByName(replacementReps.select("norm", "resolved", "rep_id"))
@@ -948,10 +871,8 @@ object Pipeline {
     val replacementRepIds = replacementReps.select(col("rep_id").as("mention_id"))
     val newRepMs = state.mentions
       .join(replacementRepIds, Seq("mention_id"), "left_semi").as[Mention]
-    val newRepKeyed = PhaseTimer.timed("rep_keying") {
-      Blocking.withBlockKeys(newRepMs, cfg.lsh)
-        .localCheckpoint(true)
-    }
+    val newRepKeyed = Blocking.withBlockKeys(newRepMs, cfg.lsh)
+      .localCheckpoint(true)
     // deliberately LAZY (never localCheckpointed): this is the whole
     // post-retraction keyed table — production reads it after the
     // DELETE; materializing it here would be an O(corpus) copy. The
@@ -964,12 +885,10 @@ object Pipeline {
 
     // scoring nodes of the affected region: surviving old scoring
     // mentions (they have keyed rows) + replacement reps
-    val scoringSurvIds = PhaseTimer.timed("scoring_surv_ids") {
-      newKeyedAll
-        .join(survIds.withColumnRenamed("mention_id", "mid"), Seq("mid"), "left_semi")
-        .select(col("mid").as("mention_id")).distinct()
-        .localCheckpoint(true)
-    }
+    val scoringSurvIds = newKeyedAll
+      .join(survIds.withColumnRenamed("mention_id", "mid"), Seq("mid"), "left_semi")
+      .select(col("mid").as("mention_id")).distinct()
+      .localCheckpoint(true)
 
     // score the region-restricted pair set of the given keyed rows —
     // shared by both edge-derivation paths below
@@ -1044,9 +963,7 @@ object Pipeline {
                 Seq("mid"), "left_semi")
           .groupBy("block_key").agg(count(lit(1)).as("r"))
         val nCounts = state.keyed.groupBy("block_key").agg(count(lit(1)).as("n"))
-        val stats = PhaseTimer.timed("dirty_stats") {
-          nCounts.join(rCounts, Seq("block_key")).localCheckpoint(true)
-        }
+        val stats = nCounts.join(rCounts, Seq("block_key")).localCheckpoint(true)
         val regimeDirty = stats.where(
             (col("n") > cfg.blockMaxSize &&
              col("n") - col("r") <= cfg.blockMaxSize) ||
@@ -1084,21 +1001,11 @@ object Pipeline {
         //    Extra retained edges to DEMOTED hubs were valid scored
         //    edges inside one old cluster — retaining them is the
         //    documented monotone stance (deleting data never merges).
-        // GRAFT_RETRACT_DELTA=0 collapses both classes to full-width —
-        // a measurement knob so one binary can A/B the delta
-        // restriction on identical staged state (BENCH.md Round 5)
-        val deltaEnabled = sys.env.get("GRAFT_RETRACT_DELTA").forall(_ != "0")
-        val regimeFull = regimeDirty.localCheckpoint(true)
-        val repHubDirty = hubDirty
+        val fullDirty = regimeDirty.localCheckpoint(true)
+        val deltaDirty = hubDirty
           .unionByName(newRepKeyed.select("block_key"))
           .distinct()
-          .join(regimeFull, Seq("block_key"), "left_anti")
-        val fullDirty =
-          if (deltaEnabled) regimeFull
-          else regimeFull.unionByName(repHubDirty)
-        val deltaDirty =
-          if (deltaEnabled) repHubDirty
-          else repHubDirty.limit(0)
+          .join(fullDirty, Seq("block_key"), "left_anti")
         val newHubs = Blocking.starHubs(
             newKeyedAll.join(broadcast(hubDirty), Seq("block_key"), "left_semi")
               .select(col("block_key"), col("mid")), cfg.starK)
@@ -1109,27 +1016,25 @@ object Pipeline {
           .select(col("mention_id").as("mid"))
           .unionByName(promotedMids).distinct()
           .localCheckpoint(true)
-        val (keyedFullDirty, keyedDeltaDirty) = PhaseTimer.timed("dirty_classify") {
-          (newKeyedAll.join(broadcast(fullDirty), Seq("block_key"), "left_semi")
-             .localCheckpoint(true),
-           newKeyedAll.join(broadcast(deltaDirty), Seq("block_key"), "left_semi")
-             .localCheckpoint(true))
-        }
-        val fresh = PhaseTimer.timed("fresh_scoring") {
-          // regime-change blocks are RARE (sizes must straddle a
-          // threshold exactly where the retraction crossed it), and
-          // with the knob off the delta side is empty — skip either
-          // pass entirely in its empty case rather than paying its
-          // fixed pair/payload/score stages
-          val sides = Seq(
-            (keyedDeltaDirty, deltaMids),
-            (keyedFullDirty, scoringSurvIds.select(col("mention_id").as("mid"))))
-            .filter { case (rows, _) => !rows.isEmpty }
-            .map { case (rows, mids) => scoreRegionPairs(rows, mids) }
+        val keyedFullDirty = newKeyedAll
+          .join(broadcast(fullDirty), Seq("block_key"), "left_semi")
+          .localCheckpoint(true)
+        val keyedDeltaDirty = newKeyedAll
+          .join(broadcast(deltaDirty), Seq("block_key"), "left_semi")
+          .localCheckpoint(true)
+        // regime-change blocks are RARE (sizes must straddle a threshold
+        // exactly where the retraction crossed it) — skip either pass
+        // entirely in its empty case rather than paying its fixed
+        // pair/payload/score stages
+        val sides = Seq(
+          (keyedDeltaDirty, deltaMids),
+          (keyedFullDirty, scoringSurvIds.select(col("mention_id").as("mid"))))
+          .filter { case (rows, _) => !rows.isEmpty }
+          .map { case (rows, mids) => scoreRegionPairs(rows, mids) }
+        val fresh =
           (if (sides.isEmpty) scoreRegionPairs(keyedDeltaDirty, deltaMids)
            else sides.reduce(_ unionByName _))
             .localCheckpoint(true)
-        }
         val carvedAffected = e
           .join(retractIds.withColumnRenamed("mention_id", "src"),
                 Seq("src"), "left_anti")
@@ -1143,15 +1048,11 @@ object Pipeline {
           .join(scoringSurvIds.withColumnRenamed("mention_id", "mid"),
                 Seq("mid"), "left_semi")
           .select("block_key").distinct()
-        val keyedActive = PhaseTimer.timed("active_keys") {
-          newKeyedAll
-            .join(activeKeys, Seq("block_key"), "left_semi")
-            .localCheckpoint(true)
-        }
-        val all = PhaseTimer.timed("region_scoring") {
-          scoreRegionPairs(keyedActive,
-            scoringSurvIds.select(col("mention_id").as("mid")))
-        }
+        val keyedActive = newKeyedAll
+          .join(activeKeys, Seq("block_key"), "left_semi")
+          .localCheckpoint(true)
+        val all = scoreRegionPairs(keyedActive,
+          scoringSurvIds.select(col("mention_id").as("mid")))
         (all, all)
     }
     val edges = ccEdges
@@ -1159,10 +1060,8 @@ object Pipeline {
     // CC over the affected subgraph; singletons coalesce to themselves.
     // Members still sort after their group rep, so component min over
     // scoring nodes is the global min — same id semantics as assemble.
-    val assign = PhaseTimer.timed("carve_cc") {
-      Clustering.connectedComponents(edges, cfg.ccMaxIter)
-        .localCheckpoint(true)
-    }
+    val assign = Clustering.connectedComponents(edges, cfg.ccMaxIter)
+      .localCheckpoint(true)
     val scoringCid = scoringSurvIds
       .join(assign.withColumnRenamed("node", "mention_id"),
             Seq("mention_id"), "left")
@@ -1174,21 +1073,17 @@ object Pipeline {
       .join(assign.withColumnRenamed("node", "rep_id"), Seq("rep_id"), "left")
       .select(col("mention_id"),
               coalesce(col("cluster_id"), col("rep_id")).as("cluster_id"))
-    val newAssign = PhaseTimer.timed("assign_attach") {
-      scoringCid.unionByName(memberCid).localCheckpoint(true)
-    }
+    val newAssign = scoringCid.unionByName(memberCid).localCheckpoint(true)
 
     // MERGE rows: surviving affected rows whose assignment changed
     val metaCols = Seq("mention_id", "conv_id", "turn_idx", "begin", "end",
                        "surface", "norm", "resolved")
-    val upserts = PhaseTimer.timed("upserts") {
-      surv
-        .withColumnRenamed("cluster_id", "old_cid")
-        .join(newAssign, Seq("mention_id"))
-        .where(col("cluster_id") =!= col("old_cid"))
-        .select(metaCols.map(col) :+ col("cluster_id"): _*)
-        .localCheckpoint(true)
-    }
+    val upserts = surv
+      .withColumnRenamed("cluster_id", "old_cid")
+      .join(newAssign, Seq("mention_id"))
+      .where(col("cluster_id") =!= col("old_cid"))
+      .select(metaCols.map(col) :+ col("cluster_id"): _*)
+      .localCheckpoint(true)
 
     RetrParts(replacementReps, newRepKeyed, upserts, freshEdges)
   }
@@ -1288,7 +1183,7 @@ object Pipeline {
     val dictBc = sc.broadcast(dict)
     val vecsBc = sc.broadcast(vecs)
     val mentionsDf = TableIO.stage(spark, "mentions", s"$root/mentions", fingerprint) {
-      allMentions(turns, dictBc, vecsBc, cfg).toDF()
+      allMentions(turns, dictBc, vecsBc).toDF()
     }
     checkpointedTail(spark, mentionsDf, root, fingerprint, cfg)
   }
@@ -1310,13 +1205,7 @@ object Pipeline {
                             bloomFpp: Double = 0.01): DataFrame = CacheTracker.scoped {
     val spark = turns.sparkSession
     val mentionsDf = TableIO.stage(spark, "mentions", s"$root/mentions", fingerprint) {
-      val ms0 =
-        if (cfg.coref)
-          Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp)
-        else
-          MentionDetect.runJoined(turns, dictDf,
-            spark.sparkContext.broadcast(Map.empty[String, Array[Float]]),
-            expectedDictKeys, bloomFpp)
+      val ms0 = Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp)
       MentionDetect.resolveJoined(ms0, vecDf).toDF()
     }
     checkpointedTail(spark, mentionsDf, root, fingerprint, cfg)
@@ -1332,24 +1221,20 @@ object Pipeline {
     // edges checkpoint keeps scored and member edges apart (kind column)
     // so the clusters stage can run CC on the small scored graph only.
     val edgesDf = TableIO.stage(spark, "edges", s"$root/edges", fingerprint) {
-      val (scoringMs, memberEdges) =
-        if (cfg.supernode) supernodeCollapse(ms, cfg) else (ms, None)
+      val (scoringMs, memberEdges) = supernodeCollapse(ms, cfg)
       val keyed = Blocking.withBlockKeys(scoringMs, cfg.lsh)
       val pairIds = Blocking.candidatePairs(keyed, cfg.tau, cfg.blockMaxSize,
                                             cfg.starThreshold, cfg.starK)
       val scored = Scoring.edges(Blocking.attachPayload(pairIds, scoringMs), cfg.score)
         .withColumn("kind", lit("scored"))
-      memberEdges
-        .map(me => scored.unionByName(me.withColumn("kind", lit("member"))))
-        .getOrElse(scored)
+      scored.unionByName(memberEdges.withColumn("kind", lit("member")))
     }
     // the edges stage table is on disk now — release blocking's caches
     CacheTracker.drainUnpersist()
     TableIO.stage(spark, "clusters", s"$root/clusters", fingerprint) {
       val scored = edgesDf.where(col("kind") === "scored").drop("kind")
       val member = edgesDf.where(col("kind") === "member").drop("kind")
-      assemble(mentionsDf, scored,
-               if (cfg.supernode) Some(member) else None, cfg)
+      assemble(mentionsDf, scored, member, cfg)
     }
   }
 

@@ -40,15 +40,10 @@ object ScalingBench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
     }
-    // GRAFT_SCALE_COREF=0 measures the r2-comparable pipeline without the
-    // with_coref union (REL's coref is its conversational extension —
-    // opt-in there too); default is the full round-3 flagship.
-    val corefOn = sys.env.getOrElse("GRAFT_SCALE_COREF", "1") != "0"
     def oneRun(p: String, c: TranscriptGen.GenConfig): (Double, Long, Long) = {
       val spark = Bench.benchSession(cpus.toString)
       val gc0 = gcMillis()
-      val (secs, turns, _) =
-        Bench.runPipeline(spark, p, c, Pipeline.Config(coref = corefOn))
+      val (secs, turns, _) = Bench.runPipeline(spark, p, c)
       val gcMs = gcMillis() - gc0
       spark.stop()
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
@@ -65,6 +60,6 @@ object ScalingBench {
     val thr = turns / secs
     println(f"""{"metric":"scaling_level","cpus":$cpus,"secs":$secs%.2f,""" +
             f""""turns":$turns,"turns_per_sec":$thr%.1f,"warmup_secs":$warm%.2f,""" +
-            s""""gc_ms":$gcMs,"n_convs":${cfg.nConvs},"coref":$corefOn}""")
+            s""""gc_ms":$gcMs,"n_convs":${cfg.nConvs}}""")
   }
 }

@@ -564,8 +564,7 @@ object SparkEntry {
       // two serial write barriers
       val written = sources.TableIO.writeBucketedAll(Seq(
         (facts, s"graft_q43_facts_$appTag", s"$base/facts", Seq("user_id"), 8),
-        (dim, s"graft_q43_dim_$appTag", s"$base/dim", Seq("user_id"), 8)),
-        threads = 2)
+        (dim, s"graft_q43_dim_$appTag", s"$base/dim", Seq("user_id"), 8)))
       val (tf, td) = (written(0), written(1))
       tf.join(td, Seq("user_id"))
         .select(col("event_id"), col("user_id"), col("n_purchase"), col("purchase_value"))

@@ -367,12 +367,11 @@ object MentionDetect {
   private[operators] def bloomSurvivorForms(
       turns: Dataset[Turn],
       bloomBc: Broadcast[org.apache.spark.util.sketch.BloomFilter],
-      masksBc: Broadcast[Map[String, Int]] = null): DataFrame = {
+      masksBc: Broadcast[Map[String, Int]]): DataFrame = {
     val spark = turns.sparkSession
     import spark.implicits._
     turns.flatMap { t =>
-      val masks = if (masksBc == null) null else masksBc.value
-      probeForms(t.text, bloomBc.value, masks).map(f => (t.conv_id, t.turn_idx, f))
+      probeForms(t.text, bloomBc.value, masksBc.value).map(f => (t.conv_id, t.turn_idx, f))
     }.toDF("conv_id", "turn_idx", "form")
   }
 
@@ -428,28 +427,22 @@ object MentionDetect {
   private[graft] def probeForms(
       text: String,
       bloom: org.apache.spark.util.sketch.BloomFilter,
-      masks: Map[String, Int] = null): Iterator[String] = {
+      masks: Map[String, Int]): Iterator[String] = {
     val toks = tokenizeCased(if (text == null) "" else text)
     val n = toks.length
     // per-position length mask (one hash probe per token), the same
     // pruning `detect` does: span (i, size) is enumerated only when some
-    // dictionary key of that token count starts with toks(i). masks ==
-    // null (no sketch supplied) degrades to probe-everything.
-    val posMask =
-      if (masks == null) null
-      else {
-        val a = new Array[Int](n)
-        var p = 0
-        while (p < n) { a(p) = masks.getOrElse(toks(p).toLowerCase, 0); p += 1 }
-        a
-      }
+    // dictionary key of that token count starts with toks(i)
+    val posMask = new Array[Int](n)
+    var p = 0
+    while (p < n) { posMask(p) = masks.getOrElse(toks(p).toLowerCase, 0); p += 1 }
     val forms = scala.collection.mutable.HashSet.empty[String]
     var size = 1
     while (size <= MaxNgram) {
       val bit = 1 << (size - 1)
       var i = 0
       while (i + size <= n) {
-        if (posMask == null || (posMask(i) & bit) != 0) {
+        if ((posMask(i) & bit) != 0) {
           val raw =
             if (size == 1) toks(i)
             else {

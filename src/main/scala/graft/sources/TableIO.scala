@@ -135,26 +135,30 @@ object TableIO {
   }
 
   /** [[writeBucketed]] for several INDEPENDENT tables, overlapped on a
-    * small thread pool (guide §2.6 "overlap independent jobs"): each
-    * write is its own Spark job over a disjoint path + catalog name, so
-    * one write's straggler tail back-fills with the next write's tasks
-    * instead of paying serial write barriers. Callers must pass frames
-    * that are already materialized (checkpointed/staged) or whose
-    * lineages are independent — overlapping writes that share an
-    * unmaterialized lineage would recompute it per thread. `threads = 1`
-    * degrades to the serial shape (the A/B arm CompactBench times).
+    * pool of up to three threads (guide §2.6 "overlap independent
+    * jobs"): each write is its own Spark job over a disjoint path +
+    * catalog name, so one write's straggler tail back-fills with the next
+    * write's tasks instead of paying serial write barriers. Callers must
+    * pass frames that are already materialized (checkpointed/staged) or
+    * whose lineages are independent — overlapping writes that share an
+    * unmaterialized lineage would recompute it per thread.
     * Specs: (df, tableName, path, bucketKeys, buckets); returns the
-    * catalog-backed frames in spec order. */
-  def writeBucketedAll(specs: Seq[(DataFrame, String, String, Seq[String], Int)],
-                       threads: Int = 3): Seq[DataFrame] = {
+    * catalog-backed frames in spec order. A failed write is rethrown only
+    * after every sibling write has settled, so the caller never sees the
+    * exception while another table is still being written. */
+  def writeBucketedAll(specs: Seq[(DataFrame, String, String, Seq[String], Int)])
+      : Seq[DataFrame] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, threads))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(3, specs.size)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
-      specs.map { case (df, name, path, key, buckets) =>
+      val writes = specs.map { case (df, name, path, key, buckets) =>
         Future(writeBucketed(df, name, path, key, buckets))
-      }.map(Await.result(_, Duration.Inf))
+      }
+      writes.foreach(Await.ready(_, Duration.Inf))
+      writes.map(_.value.get.get)
     } finally pool.shutdown()
   }
 

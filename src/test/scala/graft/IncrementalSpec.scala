@@ -86,7 +86,7 @@ class IncrementalSpec extends SparkSpec {
     val fullStar = Pipeline.run(turns, dict, vecs, starCfg)
     val (oldConvs, newConvs) = convs.splitAt((convs.length * 0.6).toInt)
     val state = Pipeline.bootstrapState(
-      Pipeline.allMentions(convSlice(oldConvs), dictBc, vecsBc, starCfg), starCfg)
+      Pipeline.allMentions(convSlice(oldConvs), dictBc, vecsBc), starCfg)
     val inc = Pipeline.runIncremental(convSlice(newConvs), dict, vecs, state, starCfg)
     assert(assign(inc.clusters) == assign(fullStar))
   }

@@ -1,6 +1,10 @@
 package graft
 
+import graft.model.{Mention, Turn}
+import graft.operators.{Coref, MentionDetect}
 import graft.sources.TranscriptGen
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** Golden end-to-end gate (BASELINE.md row 1): pairwise F1 ≥ 0.99 vs gold
@@ -16,10 +20,21 @@ class PipelineSpec extends SparkSpec {
   lazy val vecs = TranscriptGen.entityVectors(cfg, graft.operators.MentionDetect.CtxDim)
   lazy val clusters = Pipeline.run(turns, dict, vecs).cache()
 
+  /** Reference shape of the flagship mention universe: map-only detection,
+    * then coref inheritance over a turns⋈mentions cogroup, then the
+    * union. `Pipeline.allMentions` computes the same set in one shuffle. */
+  private def twoPassMentions(t: Dataset[Turn],
+                              dictBc: Broadcast[MentionDetect.Dict],
+                              vecsBc: Broadcast[Map[String, Array[Float]]])
+      : Dataset[Mention] = {
+    val det = MentionDetect.run(t, dictBc, vecsBc).cache()
+    det.unionByName(Coref.inherited(t, det, dictBc, vecsBc))
+  }
+
   test("detection finds the dictionary golds; detected ∪ inherited = ALL golds") {
     val dictBc = spark.sparkContext.broadcast(dict)
     val vecsBc = spark.sparkContext.broadcast(vecs)
-    val ms = Pipeline.mentions(turns, dictBc, vecsBc).cache()
+    val ms = MentionDetect.run(turns, dictBc, vecsBc).cache()
     // Mention.surface is the RAW text span (cased fixtures stay cased —
     // the cascade normalizes, it must not rewrite the observed surface);
     // gold stores the lowercase form, so compare case-folded.
@@ -46,8 +61,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("one-shuffle mention stage ≡ two-pass detect+cogroup shape (full payload)") {
-    // the flagship default (corefOneShot) must emit exactly the round-3
-    // shape's union — same ids, spans, norms, candidates, ctx vectors,
+    // the flagship mention stage must emit exactly the round-3 shape's
+    // union — same ids, spans, norms, candidates, ctx vectors,
     // resolutions — or the scaling redesign silently changed semantics
     val dictBc = spark.sparkContext.broadcast(dict)
     val vecsBc = spark.sparkContext.broadcast(vecs)
@@ -56,10 +71,8 @@ class PipelineSpec extends SparkSpec {
                    m.candidates.map(c => (c.entity, c.prior)).toSeq,
                    m.resolved, math.round(m.resolvedScore * 1e9), m.ctx.toSeq))
         .collect().toSet
-    val oneShot = keys(Pipeline.allMentions(turns, dictBc, vecsBc,
-      Pipeline.Config(corefOneShot = true)))
-    val twoPass = keys(Pipeline.allMentions(turns, dictBc, vecsBc,
-      Pipeline.Config(corefOneShot = false)))
+    val oneShot = keys(Pipeline.allMentions(turns, dictBc, vecsBc))
+    val twoPass = keys(twoPassMentions(turns, dictBc, vecsBc))
     assert(oneShot.nonEmpty)
     val onlyA = oneShot -- twoPass
     val onlyB = twoPass -- oneShot
@@ -71,7 +84,6 @@ class PipelineSpec extends SparkSpec {
     // one-shot ≡ two-pass ≡ joined must not be a property of the default
     // fixture: re-assert on corpora with hot Zipf skew + dense mentions,
     // short sparse conversations, and ambiguity-heavy dictionaries
-    import graft.operators.{Coref, MentionDetect}
     val configs = Seq(
       TranscriptGen.GenConfig(nEntities = 80, nConvs = 120, seed = 7L,
                               zipfS = 1.8, mentionProb = 0.95),
@@ -91,8 +103,7 @@ class PipelineSpec extends SparkSpec {
           .collect().toSet
       val oneShot = keys(Pipeline.allMentions(t, dictBc, vecsBc))
       assert(oneShot.nonEmpty, s"empty mention set for $c")
-      val twoPass = keys(Pipeline.allMentions(t, dictBc, vecsBc,
-        Pipeline.Config(corefOneShot = false)))
+      val twoPass = keys(twoPassMentions(t, dictBc, vecsBc))
       assert(oneShot == twoPass, s"one-shot != two-pass for $c: " +
         s"onlyA=${(oneShot -- twoPass).take(3)} onlyB=${(twoPass -- oneShot).take(3)}")
       val dictDf = d.values.toSeq.toDS().repartition(3)
@@ -145,6 +156,29 @@ class PipelineSpec extends SparkSpec {
     val f1 = Pipeline.pairwiseF1(starClusters, gold, dict, starCfg)
     info(f"star mode: tp=${f1.tp} fp=${f1.fp} fn=${f1.fn} F1=${f1.f1}%.4f")
     assert(f1.f1 >= 0.99, s"star-mode F1 ${f1.f1} (tp=${f1.tp} fp=${f1.fp} fn=${f1.fn})")
+  }
+
+  test("runCheckpointed ≡ run; same-fingerprint rerun RESUMES from stage tables") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    def assignments(df: org.apache.spark.sql.DataFrame) =
+      df.select("mention_id", "cluster_id").as[(String, String)].collect().toSet
+    val direct = assignments(clusters)
+    val ckpt = assignments(Pipeline.runCheckpointed(turns, dict, vecs, root, "fp1"))
+    assert(ckpt == direct)
+    Seq("mentions", "edges", "clusters").foreach { n =>
+      assert(graft.sources.TableIO.readFingerprint(s"$root/$n").contains("fp1"),
+        s"stage $n has no fp1 manifest")
+    }
+    // resume proof: rerun with the SAME fingerprint but EMPTY inputs —
+    // a recompute would emit nothing; a resume reads the stage tables
+    val emptyTurns = spark.emptyDataset[Turn]
+    val resumed = assignments(
+      Pipeline.runCheckpointed(emptyTurns, Map.empty, Map.empty, root, "fp1"))
+    assert(resumed == direct, "same-fingerprint rerun recomputed instead of resuming")
+    // changed fingerprint ⇒ recompute (now over the empty inputs)
+    val recomputed = assignments(
+      Pipeline.runCheckpointed(emptyTurns, Map.empty, Map.empty, root, "fp2"))
+    assert(recomputed.isEmpty)
   }
 
   test("every gold mention lands in a cluster; ids are min-member") {

@@ -126,6 +126,23 @@ class TableIOSpec extends SparkSpec {
     assert(out.count() == 20) // no stale fpA rows appended into fpB output
   }
 
+  test("writeBucketedAll rethrows a failed write only after its sibling writes finish") {
+    val dir = Files.createTempDirectory("graft-bkt-fail").toString
+    // the first spec fails at once (its bucket column does not exist);
+    // the second is a valid write whose tasks sleep, so it is still
+    // running when the first failure is known
+    val failing = spark.range(4).toDF("k")
+    val slowId = udf { (x: Long) => Thread.sleep(1000); x }
+    val slow = spark.range(0, 4, 1, 2).select(slowId(col("id")).as("k"))
+    intercept[Exception] {
+      TableIO.writeBucketedAll(Seq(
+        (failing, "tio_bkt_fail", s"$dir/fail", Seq("missing"), 2),
+        (slow, "tio_bkt_slow", s"$dir/slow", Seq("k"), 2)))
+    }
+    assert(Files.exists(java.nio.file.Paths.get(dir, "slow", "_SUCCESS")),
+      "the failure reached the caller while a sibling write was still running")
+  }
+
   test("co-bucketed tables join and aggregate with zero shuffle exchanges") {
     val dir = Files.createTempDirectory("graft-buckets").toString
     val facts = spark.range(10000)
